@@ -36,6 +36,12 @@ object GraftSession {
       // should lower the advisory size with it.
       .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
         sys.env.getOrElse("SPARK_GRAFT_SHJ_THRESHOLD", "64m"))
+      // a persisted frame is planned with AQE like any other query, so
+      // its cached copy keeps the coalesced partitioning the uncached
+      // plan would have: a pipeline sink written from a copy gets as
+      // many part files as one written straight from the plan (with the
+      // default `false` the copy keeps every shuffle partition)
+      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.parquet.int96RebaseModeInRead", "CORRECTED")

@@ -1,7 +1,7 @@
 package graft.functions
 
 import java.time.format.DateTimeFormatter
-import java.time.{Instant, ZoneOffset}
+import java.time.ZoneOffset
 import scala.util.matching.Regex
 
 import org.apache.spark.sql.SparkSession
@@ -16,8 +16,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * used at plugins/__init__.py:211-212, 528, 534).
   *
   * `{key}` substitutes verbatim; `{key:%FMT}` parses the value as an ISO
-  * instant and renders it with strftime-style codes. Missing keys raise —
-  * same contract as Python's str.format.
+  * datetime ([[graft.pipeline.Messages.parseIso]]: zoned, offset, or
+  * naive read as UTC) and renders it in UTC with strftime-style codes.
+  * Missing keys raise — same contract as Python's str.format.
   */
 object Compose {
   private val Placeholder: Regex = """\{([A-Za-z0-9_]+)(?::([^}]+))?\}""".r
@@ -29,8 +30,11 @@ object Compose {
         throw new IllegalArgumentException(s"compose: missing key ${m.group(1)}"))
       val out = Option(m.group(2)) match {
         case Some(fmt) if fmt.startsWith("%") =>
+          val t = graft.pipeline.Messages.parseIso(v).getOrElse(
+            throw new IllegalArgumentException(
+              s"compose: ${m.group(1)}='$v' is not an ISO datetime"))
           DateTimeFormatter.ofPattern(strftimeToJava(fmt)).format(
-            Instant.parse(v).atZone(ZoneOffset.UTC))
+            t.atZone(ZoneOffset.UTC))
         case _ => v
       }
       Regex.quoteReplacement(out)

@@ -38,8 +38,10 @@ object Messages {
       datetimes: Map[String, java.time.Instant] = Map.empty)
 
   /** Python `datetime.fromisoformat` analog: accepts zoned instants,
-    * offset datetimes, and naive datetimes (read as UTC). */
-  private[pipeline] def parseIso(s: String): Option[java.time.Instant] = {
+    * offset datetimes, and naive datetimes (read as UTC). The one
+    * timestamp parser of the library: plugins and file-name
+    * composition ([[graft.functions.Compose]]) both read through it. */
+  private[graft] def parseIso(s: String): Option[java.time.Instant] = {
     import java.time._
     def attempt[A](f: => A): Option[A] =
       try Some(f) catch { case _: Exception => None }

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, FloatType}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.time.Instant
 
@@ -12,11 +13,15 @@ import java.time.Instant
   * Laziness contract (the heart of the reference's design,
   * plugins/__init__.py:394-395): every plugin up to [[SaveDatasets]] only
   * *builds* DataFrames — Catalyst holds the logical plans exactly like
-  * dask holds the delayed graph — and SaveDatasets' write actions are the
-  * only compute triggers. Shared upstream frames are computed once per
-  * write unless persisted; [[CheckValidDataFraction]] persists before its
-  * data-dependent check just as the reference calls dask.persist
-  * (plugins/__init__.py:1014-1032).
+  * dask holds the delayed graph — and the data-dependent check and the
+  * write actions are the only compute triggers. Each frame the work-list
+  * reads is computed at most once per job: [[CheckValidDataFraction]]
+  * persists every area frame it checks before the check, just as the
+  * reference calls dask.persist (plugins/__init__.py:1014-1032), and
+  * [[SaveDatasets]] persists any other frame that feeds two or more
+  * sinks, so every write reads the same copy ([[Plugins.persistFrames]]).
+  * The copies live in [[PipelineContext.cached]] and [[Runner]] releases
+  * them when the job ends, committed or aborted.
   */
 final case class WrittenFile(
     area: Option[String], product: String, format: String,
@@ -40,9 +45,17 @@ final case class PipelineContext(
     inputs: Seq[String] = Seq.empty,
     /** Set by aborting plugins (`AbortProcessing`, launcher.py:456-457):
       * downstream plugins become no-ops; the runner logs and moves on. */
-    aborted: Option[String] = None) {
+    aborted: Option[String] = None,
+    /** Frames this job persisted ([[Plugins.persistFrames]]); released
+      * by [[Runner]] when the job ends. */
+    cached: Seq[CachedFrame] = Seq.empty) {
   def abort(reason: String): PipelineContext = copy(aborted = Some(reason))
 }
+
+/** A persisted copy of the frame under `key`, filtered to `products`;
+  * it stands in for `source` while that is still the key's frame. */
+final case class CachedFrame(key: Option[String], source: DataFrame,
+    products: Set[String], df: DataFrame)
 
 trait Plugin extends Serializable {
   def name: String
@@ -64,6 +77,57 @@ object Plugins {
   private def isoInstant(key: String, s: String): Instant =
     Messages.parseIso(s).getOrElse(throw new IllegalArgumentException(
       s"metadata $key='$s' is not an ISO datetime"))
+
+  /** The frame key a work item reads: its area's own frame, else the
+    * native (None) frame; None when neither exists. */
+  private def frameKey(ctx: PipelineContext, item: WorkItem): Option[Option[String]] =
+    if (ctx.frames.contains(item.area)) Some(item.area)
+    else if (ctx.frames.contains(None)) Some(None)
+    else None
+
+  /** Persist-once-per-job: group the work-list by the frame key each item
+    * reads and return, per key, a persisted copy of that frame filtered
+    * to the products its items name. A copy the job already holds is
+    * reused when it still stands for the key's frame and covers those
+    * products; otherwise a new one is persisted when `want(key, items)`
+    * holds, and recorded in `cached`. Keys neither held nor wanted are
+    * absent from the map. Lazy: the first action that reads a copy
+    * computes it. */
+  private[pipeline] def persistFrames(ctx: PipelineContext, productCol: String)(
+      want: (Option[String], Seq[WorkItem]) => Boolean)
+      : (PipelineContext, Map[Option[String], DataFrame]) = {
+    def covering(cached: Seq[CachedFrame], key: Option[String], products: Seq[String]) =
+      cached.find(c => c.key == key && (c.source eq ctx.frames(key)) &&
+        products.forall(c.products))
+    val byKey = ctx.worklist.groupBy(frameKey(ctx, _)).toSeq.collect {
+      case (Some(key), items) => (key, items, items.flatMap(_.members).distinct)
+    }
+    val fresh = byKey.collect {
+      case (key, items, products)
+          if covering(ctx.cached, key, products).isEmpty && want(key, items) =>
+        val source = ctx.frames(key)
+        CachedFrame(key, source, products.toSet,
+          source.filter(col(productCol).isin(products: _*)).persist())
+    }
+    val cached = ctx.cached ++ fresh
+    (ctx.copy(cached = cached), byKey.flatMap { case (key, _, products) =>
+      covering(cached, key, products).map(key -> _.df)
+    }.toMap)
+  }
+
+  /** Unpersist the copies `after` holds that `before` did not, blocking
+    * until their blocks are gone. */
+  private[pipeline] def releaseCopies(before: PipelineContext,
+      after: PipelineContext): Unit =
+    after.cached.filterNot(c => before.cached.exists(_ eq c))
+      .foreach(_.df.unpersist(blocking = true))
+
+  /** Run `body`; if it throws, release the copies `after` holds that
+    * `before` did not, then rethrow — a plugin that fails after
+    * persisting leaves nothing behind. */
+  private def releasingOnFailure[T](before: PipelineContext,
+      after: PipelineContext)(body: => T): T =
+    try body catch { case e: Throwable => releaseCopies(before, after); throw e }
 
   /** `create_scene` (plugins/__init__.py:86-99): open inputs with a named
     * reader into the native-projection frame; `options` carries the
@@ -605,9 +669,15 @@ object Plugins {
       weightDeltaMax: Double = 10.0)
 
   /** `check_valid_data_fraction` (plugins/__init__.py:955-1079): persist
-    * the scene once, compute per-product valid fractions in ONE aggregate
-    * pass, drop failing work-list items. Data-dependent pruning — the only
-    * plugin that triggers compute before save, exactly like the reference. */
+    * each checked area frame once for the job ([[persistFrames]] — the
+    * reference's dask.persist of every checked product,
+    * :1014-1032), compute per-(area, product) valid fractions from those
+    * copies in ONE pass, drop failing work-list items. Valid
+    * means neither null nor NaN: both are fill (doc/source/plugins.rst
+    * "not fill value (NaN)", counted at :1062). The copies stay persisted
+    * for [[SaveDatasets]] to write from; [[Runner]] releases them when the
+    * job ends. Data-dependent pruning — the only plugin that triggers
+    * compute before save, exactly like the reference. */
   final case class CheckValidDataFraction(
       minFraction: Double, productCol: String = "product",
       valueCol: String = "value") extends Plugin {
@@ -615,39 +685,49 @@ object Plugins {
     def apply(ctx: PipelineContext): PipelineContext =
       if (ctx.aborted.isDefined) ctx
       else {
-        val checked = ctx.frames.toSeq.collect {
-          case (Some(name), df) => name -> df
+        val (next, copies) = persistFrames(ctx, productCol)((key, _) => key.isDefined)
+        val checked = copies.toSeq.collect { case (Some(area), df) =>
+          area -> (df, next.worklist.filter(_.area.contains(area)).map(_.product).distinct)
         }
-        if (checked.isEmpty) ctx
+        if (checked.isEmpty) next
         else {
-          // ALL areas in ONE aggregation over one unioned, persisted plan
-          // — the reference persists every checked product at once
-          // (plugins/__init__.py:1014-1032) precisely so shared inputs
-          // compute together; the per-area sequential loop this replaces
-          // ran one Spark job per area and recomputed shared upstream
-          // frames per iteration. The collect() is config-sized: one row
-          // per (area, product).
-          val tagged = checked.map { case (name, df) =>
-            df.select(lit(name).as("__cvdf_area"),
-              col(productCol).cast("string").as("__cvdf_product"),
-              col(valueCol).isNotNull.cast("double").as("__cvdf_valid"))
-          }
-          val all = tagged.reduce(_.unionAll(_)).persist()
-          val fractions: Map[(Option[String], String), Double] =
-            try {
-              all.groupBy(col("__cvdf_area"), col("__cvdf_product"))
-                .agg(avg(col("__cvdf_valid")).as("frac"))
-                .collect()
-                .map(r => (Option(r.getString(0)), r.getString(1)) -> r.getDouble(2))
-                .toMap
-            } finally { all.unpersist() }
-          val pruned = ctx.worklist.filter { item =>
+          val fractions = releasingOnFailure(ctx, next)(validFractions(checked))
+          val pruned = next.worklist.filter { item =>
             item.area.isEmpty ||
               fractions.get((item.area, item.product)).forall(_ >= minFraction)
           }
-          ctx.copy(worklist = pruned)
+          next.copy(worklist = pruned)
         }
       }
+
+    /** ALL areas in ONE action: each copy's fractions ride a noop pass
+      * over the union of the copies as observed metrics, one per (area,
+      * product). The pass has no exchange, so it is ONE Spark job for any
+      * number of areas, and it fills the copies the writes read next. */
+    private def validFractions(checked: Seq[(String, (DataFrame, Seq[String]))])
+        : Map[(Option[String], String), Double] = {
+      val observed = checked.map { case (area, (df, products)) =>
+        val v = col(valueCol)
+        val fill = df.schema(valueCol).dataType match {
+          case DoubleType | FloatType => v.isNull || isnan(v)
+          case _ => v.isNull
+        }
+        val valid = when(fill, 0.0).otherwise(1.0)
+        val fracs = products.zipWithIndex.map { case (p, i) =>
+          avg(when(col(productCol).cast("string") === p, valid)).as(s"f$i")
+        }
+        val obs = org.apache.spark.sql.Observation()
+        (area, products, obs, df.observe(obs, fracs.head, fracs.tail: _*).select())
+      }
+      observed.map(_._4).reduce(_.unionAll(_))
+        .write.format("noop").mode("overwrite").save()
+      observed.flatMap { case (area, products, obs, _) =>
+        val row = obs.get
+        products.zipWithIndex.flatMap { case (p, i) =>
+          Option(row(s"f$i")).map(f => (Option(area), p) -> f.asInstanceOf[Double])
+        }
+      }.toMap
+    }
   }
 
   /** trollsift-style `compose` (used at plugins/__init__.py:211-212):
@@ -669,8 +749,15 @@ object Plugins {
     * plugins/__init__.py:392-395): every sink's plan is BUILT before any
     * is executed — an analysis error in the last sink surfaces before a
     * single byte of the first is written — then the write actions run
-    * back-to-back on shared persisted upstreams if the caller persisted
-    * them. `eagerWriting=true` (doc/source/plugins.rst:162-167) instead
+    * back-to-back. Shared inputs are computed once, as in the reference's
+    * single compute: every frame that feeds two or more sinks (overview
+    * levels count) is persisted once for the job ([[persistFrames]]),
+    * and copies [[CheckValidDataFraction]] already persisted are reused,
+    * so each write reads the copy instead of re-running the scan and the
+    * area's resample. A frame feeding one sink stays unpersisted.
+    * [[Runner]] releases the copies when the job ends; a failing write
+    * releases the copies this plugin persisted before rethrowing.
+    * `eagerWriting=true` (doc/source/plugins.rst:162-167) instead
     * builds and executes each file's plan before the next one is even
     * constructed, trading that all-or-nothing analysis for earlier output.
     *
@@ -730,18 +817,32 @@ object Plugins {
           writeStaged(sink).flatMap { st =>
             if (immediate) Some(publish(st)) else { pending += st; None }
           }
-        val written =
-          if (eagerWriting)
-            ctx.worklist.flatMap(item => planOne(ctx, item).flatMap(commit))
-          else {
-            // force every plan before the first action (see class doc)
-            val sinks = ctx.worklist.flatMap(item => planOne(ctx, item))
-            sinks.flatMap(commit)
-          }
-        // renamed_files (plugins/__init__.py:318-327): publish the whole
-        // batch only after every write committed
-        val manifest = if (immediate) written else pending.map(publish).toSeq
-        ctx.copy(manifest = ctx.manifest ++ manifest)
+        // a frame feeding two or more sinks (overviews count) is computed
+        // once and every write reads the copy; copies the valid-fraction
+        // check persisted are reused whatever their sink count
+        val (next, copies) = persistFrames(ctx, productCol) { (key, items) =>
+          val frame = ctx.frames(key)
+          val levels =
+            if (frame.columns.contains(yCol) && frame.columns.contains(xCol))
+              overviews.size
+            else 0
+          items.size * (1 + levels) >= 2
+        }
+        val reading = next.copy(frames = next.frames ++ copies)
+        releasingOnFailure(ctx, next) {
+          val written =
+            if (eagerWriting)
+              next.worklist.flatMap(item => planOne(reading, item).flatMap(commit))
+            else {
+              // force every plan before the first action (see class doc)
+              val sinks = next.worklist.flatMap(item => planOne(reading, item))
+              sinks.flatMap(commit)
+            }
+          // renamed_files (plugins/__init__.py:318-327): publish the whole
+          // batch only after every write committed
+          val manifest = if (immediate) written else pending.map(publish).toSeq
+          next.copy(manifest = next.manifest ++ manifest)
+        }
       }
 
     /** Build the sink plans for one work item: the product slice plus any

@@ -29,7 +29,9 @@ object Runner {
 
   /** Run `plugins` over each priority slice of the work-list in order.
     * Each slice sees only its own work items (the reference forks one
-    * job per priority, launcher.py:269-300); frames/metadata are shared. */
+    * job per priority, launcher.py:269-300); frames/metadata are shared.
+    * The frames a slice's plugins persisted ([[PipelineContext.cached]])
+    * are unpersisted when its chain ends, committed or aborted. */
   def processJobs(ctx: PipelineContext, plugins: Seq[Plugin],
                   timeoutPerPlugin: Duration = Duration.Inf,
                   crashHandlers: Seq[CrashHandler] = Seq.empty): Seq[JobReport] = {
@@ -92,6 +94,9 @@ object Runner {
           (next, acc :+ PluginResult(plugin.name, secs, next.aborted))
       }
     start.spark.sparkContext.clearJobGroup()
-    JobReport(prio, results, finalCtx)
+    // the job's persisted frames live exactly as long as the job,
+    // whether it committed or aborted
+    Plugins.releaseCopies(start, finalCtx)
+    JobReport(prio, results, finalCtx.copy(cached = start.cached))
   }
 }

@@ -51,6 +51,23 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
+  test("compose renders a naive start_time as UTC in the reference's file-name pattern") {
+    // the reference's pl.yaml pattern; naive ISO datetimes (no zone) are
+    // what older posttroll producers send, read as UTC like the message
+    // layer's parser
+    val pattern = "{start_time:%Y%m%d_%H%M%S}_{platform_name}_{area}_{product}.{format}"
+    val values = Map("platform_name" -> "noaa19", "area" -> "euro",
+      "product" -> "N", "format" -> "tif")
+    assert(Plugins.compose(pattern, values + ("start_time" -> "2026-08-12T06:30:15")) ==
+      "20260812_063015_noaa19_euro_N.tif")
+    assert(Plugins.compose(pattern, values + ("start_time" -> "2026-08-12T08:30:15+02:00")) ==
+      "20260812_063015_noaa19_euro_N.tif")
+    val e = intercept[IllegalArgumentException] {
+      Plugins.compose(pattern, values + ("start_time" -> "not-a-time"))
+    }
+    assert(e.getMessage.contains("start_time"))
+  }
+
   test("check_metadata aborts on value and age; metadata_alias rewrites") {
     val ctx = PipelineContext(spark, spec,
       metadata = Map("platform_name" -> "noaa15",
@@ -195,6 +212,25 @@ class PipelineSpec extends SparkSpec {
     assert(kept == Set("N")) // R is 50% valid -> dropped
     // areas without a checked frame are untouched
     assert(pruned.worklist.exists(_.area.contains("pacific")))
+  }
+
+  test("valid-fraction check counts NaN as fill, like null") {
+    import spark.implicits._
+    val frame = Seq[(String, Int, Int, java.lang.Double)](
+      ("N", 1, 1, 1.0), ("N", 1, 2, Double.NaN),       // 1/2 valid
+      ("R", 1, 1, 3.0), ("R", 1, 2, 4.0),              // 2/2 valid
+      ("R", 1, 3, 5.0), ("R", 1, 4, null)              // 3/4 with R above
+    ).toDF("product", "y", "x", "value")
+    val ctx = PipelineContext(spark, spec, Map.empty,
+      frames = Map(Option("euro") -> frame, None -> frame),
+      worklist = Worklist.expand(spec))
+    val pruned = CheckValidDataFraction(minFraction = 0.7)(ctx)
+    try {
+      assert(pruned.worklist.filter(_.area.contains("euro")).map(_.product).toSet ==
+        Set("R"))
+      assert(CheckValidDataFraction(minFraction = 0.8)(pruned)
+        .worklist.forall(!_.area.contains("euro")))
+    } finally pruned.cached.foreach(_.df.unpersist(blocking = true))
   }
 
   test("valid-fraction check: one action, job count independent of area count") {
